@@ -1,7 +1,7 @@
 package graft.functions
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
@@ -177,6 +177,84 @@ object JsonField {
         "multi-selector path where a single selector is required")
     sels(0)
   }
+
+  // length cap keeps `toInt` from overflowing on a >=10-digit numeral:
+  // an index that large is out of range of any real array, so it falls
+  // through to the object-key/missing-path branch like any other miss
+  // (never an uncaught NumberFormatException crashing the task)
+  private def isIndex(seg: Segment): Boolean =
+    !seg.quoted && seg.text.nonEmpty && seg.text.length <= 9 &&
+      seg.text.forall(c => c >= '0' && c <= '9')
+
+  private def isSliceSeg(seg: Segment): Boolean =
+    !seg.quoted && isSlice(seg.text)
+
+  /** The [lo, hi]-inclusive sub-array of `arr` as a fresh ArrayNode;
+    * out-of-range bounds clamp, an inverted range is empty (standard
+    * slice behavior — never a miss on an actual array). */
+  private def sliceNode(arr: JsonNode, seg: Segment): JsonNode = {
+    val (lo, hiOpt) = sliceBounds(seg.text)
+    val out = JsonPayload.mapper.createArrayNode()
+    var i = lo
+    val end = math.min(hiOpt.map(_ + 1).getOrElse(arr.size), arr.size)
+    while (i < end) { out.add(arr.get(i)); i += 1 }
+    out
+  }
+
+  /** The child at `seg`: array element for an unquoted numeric segment on
+    * an array node, sliced sub-array for an unquoted `[lo:hi]` segment,
+    * else object field (Jackson returns null for either miss — including
+    * a quoted segment against an array, which is a forced key lookup and
+    * arrays have no keys; a slice against a non-array is likewise a
+    * miss). */
+  private def step(node: JsonNode, seg: Segment): JsonNode =
+    if (isSliceSeg(seg)) { if (node.isArray) sliceNode(node, seg) else null }
+    else if (node.isArray && isIndex(seg)) node.get(seg.text.toInt)
+    else node.get(seg.text)
+
+  /** The node one selector resolves to, or Java null for a miss. A JSON
+    * null leaf comes back as Jackson's NullNode — present, distinct from
+    * a miss (a slice of an array always exists, possibly empty). */
+  private def resolveNode(root: JsonNode, segs: Array[Segment]): JsonNode = {
+    var node: JsonNode = root
+    var i = 0
+    while (node != null && i < segs.length - 1) {
+      node = step(node, segs(i)); i += 1
+    }
+    if (node == null) return null
+    val leaf = segs(segs.length - 1)
+    if (isSliceSeg(leaf)) {
+      if (node.isArray) sliceNode(node, leaf) else null
+    } else if (node.isArray && isIndex(leaf)) {
+      if (leaf.text.toInt < node.size) node.get(leaf.text.toInt) else null
+    } else if (node.isObject && node.has(leaf.text)) {
+      node.get(leaf.text)
+    } else null
+  }
+
+  /** The node a parsed path resolves to from `root`, or Java null for a
+    * miss. One selector yields its node; several (multi-selection) yield
+    * the array of every selector's value, or a miss as soon as any
+    * selector fails (jql walker semantics). */
+  private[functions] def resolve(root: JsonNode, selectors: Array[Array[Segment]]): JsonNode =
+    if (selectors.length == 1) resolveNode(root, selectors(0))
+    else {
+      val arr = JsonPayload.mapper.createArrayNode()
+      var i = 0
+      while (i < selectors.length) {
+        val n = resolveNode(root, selectors(i))
+        if (n == null) return null
+        arr.add(n); i += 1
+      }
+      arr
+    }
+
+  /** The payload's JSON tree, or Java null when it is absent or not JSON. */
+  private[functions] def parse(u: UTF8String): JsonNode =
+    if (u == null) null
+    else
+      try JsonPayload.mapper.readTree(u.toString)
+      catch { case _: Exception => null }
 }
 
 /** `struct<exists: boolean, raw: string>` for one dotted path of the
@@ -187,7 +265,7 @@ object JsonField {
   * Path grammar ([[JsonField.splitPath]]): dot-separated segments; a
   * purely NUMERIC unquoted segment indexes into an array (`a.0.b` — the
   * jql crate's array access the reference routes `-c` paths through,
-  * /root/reference/src/consume.rs:311-443); an unquoted `[lo:hi]` segment
+  * the reference's src/consume.rs:311-443); an unquoted `[lo:hi]` segment
   * slices an array with jql's inclusive bounds (`a.[1:2]`, the serialized
   * sub-array; traversal can continue into it); a QUOTED segment is always
   * a key lookup and may contain dots (`meta."a.b"`, the jql quoted
@@ -215,86 +293,10 @@ case class JsonField(child: Expression, path: String) extends UnaryExpression {
   @transient private lazy val selectors: Array[Array[JsonField.Segment]] =
     JsonField.splitSelectors(path)
 
-  // length cap keeps `toInt` from overflowing on a >=10-digit numeral:
-  // an index that large is out of range of any real array, so it falls
-  // through to the object-key/missing-path branch like any other miss
-  // (never an uncaught NumberFormatException crashing the task)
-  private def isIndex(seg: JsonField.Segment): Boolean =
-    !seg.quoted && seg.text.nonEmpty && seg.text.length <= 9 &&
-      seg.text.forall(c => c >= '0' && c <= '9')
-
-  private def isSliceSeg(seg: JsonField.Segment): Boolean =
-    !seg.quoted && JsonField.isSlice(seg.text)
-
-  /** The [lo, hi]-inclusive sub-array of `arr` as a fresh ArrayNode;
-    * out-of-range bounds clamp, an inverted range is empty (standard
-    * slice behavior — never a miss on an actual array). */
-  private def sliceNode(arr: JsonNode, seg: JsonField.Segment): JsonNode = {
-    val (lo, hiOpt) = JsonField.sliceBounds(seg.text)
-    val out = JsonPayload.mapper.createArrayNode()
-    var i = lo
-    val end = math.min(hiOpt.map(_ + 1).getOrElse(arr.size), arr.size)
-    while (i < end) { out.add(arr.get(i)); i += 1 }
-    out
-  }
-
-  /** The child at `seg`: array element for an unquoted numeric segment on
-    * an array node, sliced sub-array for an unquoted `[lo:hi]` segment,
-    * else object field (Jackson returns null for either miss — including
-    * a quoted segment against an array, which is a forced key lookup and
-    * arrays have no keys; a slice against a non-array is likewise a
-    * miss). */
-  private def step(node: JsonNode, seg: JsonField.Segment): JsonNode =
-    if (isSliceSeg(seg)) { if (node.isArray) sliceNode(node, seg) else null }
-    else if (node.isArray && isIndex(seg)) node.get(seg.text.toInt)
-    else node.get(seg.text)
-
-  /** The node one selector resolves to, or Java null for a miss. A JSON
-    * null leaf comes back as Jackson's NullNode — present, distinct from
-    * a miss (a slice of an array always exists, possibly empty). */
-  private def resolveNode(root: JsonNode, segs: Array[JsonField.Segment]): JsonNode = {
-    var node: JsonNode = root
-    var i = 0
-    while (node != null && i < segs.length - 1) {
-      node = step(node, segs(i)); i += 1
-    }
-    if (node == null) return null
-    val leaf = segs(segs.length - 1)
-    if (isSliceSeg(leaf)) {
-      if (node.isArray) sliceNode(node, leaf) else null
-    } else if (node.isArray && isIndex(leaf)) {
-      if (leaf.text.toInt < node.size) node.get(leaf.text.toInt) else null
-    } else if (node.isObject && node.has(leaf.text)) {
-      node.get(leaf.text)
-    } else null
-  }
-
   def convert(u: UTF8String): InternalRow = {
-    var exists = false
-    var raw: UTF8String = null
-    if (u != null) {
-      val root =
-        try JsonPayload.mapper.readTree(u.toString)
-        catch { case _: Exception => null }
-      if (root != null) {
-        if (selectors.length == 1) {
-          val n = resolveNode(root, selectors(0))
-          if (n != null) { exists = true; raw = JsonPayload.valueText(n) }
-        } else {
-          // multi-selection: the array of every selector's value, or a
-          // miss as soon as any selector fails (jql walker semantics)
-          val arr = JsonPayload.mapper.createArrayNode()
-          var ok = true
-          var i = 0
-          while (ok && i < selectors.length) {
-            val n = resolveNode(root, selectors(i))
-            if (n == null) ok = false else { arr.add(n); i += 1 }
-          }
-          if (ok) { exists = true; raw = JsonPayload.valueText(arr) }
-        }
-      }
-    }
-    InternalRow(exists, raw)
+    val root = JsonField.parse(u)
+    val n = if (root == null) null else JsonField.resolve(root, selectors)
+    InternalRow(n != null, JsonPayload.valueText(n))
   }
 
   override def eval(input: InternalRow): Any =
@@ -313,4 +315,59 @@ case class JsonField(child: Expression, path: String) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): JsonField =
     copy(child = newChild)
+}
+
+/** Every `-c` mapping path of a consume, resolved from ONE parse of the
+  * payload: `struct<p0: struct<exists, raw, num>, p1: ...>`, one field per
+  * path in order. `exists` and `raw` are [[JsonField]]'s answer for that
+  * path (same grammar, same misses — a malformed or non-object payload
+  * is a miss for every path); `num` reports whether the value's JSON
+  * token is a number, which the VARCHAR coercion needs and the text
+  * cannot tell (`"1065"` and `1065` have the same raw text). */
+case class JsonPaths(child: Expression, paths: Seq[String]) extends UnaryExpression {
+  override def dataType: DataType = StructType(paths.indices.map(i =>
+    StructField(s"p$i", JsonPaths.FieldType, nullable = false)))
+  override def nullable: Boolean = false
+
+  // bind-time grammar validation, as in JsonField
+  paths.foreach(JsonField.splitSelectors)
+
+  @transient private lazy val selectors: Array[Array[Array[JsonField.Segment]]] =
+    paths.map(JsonField.splitSelectors).toArray
+
+  def convert(u: UTF8String): InternalRow = {
+    val root = JsonField.parse(u)
+    val out = new Array[Any](selectors.length)
+    var i = 0
+    while (i < out.length) {
+      val n = if (root == null) null else JsonField.resolve(root, selectors(i))
+      out(i) = InternalRow(n != null, JsonPayload.valueText(n), n != null && n.isNumber)
+      i += 1
+    }
+    new GenericInternalRow(out)
+  }
+
+  override def eval(input: InternalRow): Any =
+    convert(child.eval(input).asInstanceOf[UTF8String])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("jsonPaths", this, classOf[JsonPaths].getName)
+    val childGen = child.genCode(ctx)
+    val code =
+      code"""
+        ${childGen.code}
+        InternalRow ${ev.value} =
+          $ref.convert(${childGen.isNull} ? null : ${childGen.value});"""
+    ev.copy(code = code, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): JsonPaths =
+    copy(child = newChild)
+}
+
+object JsonPaths {
+  val FieldType: StructType = StructType(Seq(
+    StructField("exists", BooleanType, nullable = false),
+    StructField("raw", StringType, nullable = true),
+    StructField("num", BooleanType, nullable = false)))
 }

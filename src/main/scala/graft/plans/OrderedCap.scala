@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** "First n rows in key order" without the global sort + single-partition
   * GlobalLimit funnel.
@@ -24,6 +25,14 @@ import org.apache.spark.sql.functions._
   * re-apply any display ordering); cost is one extra counting pass
   * instead of a single-point sort.
   *
+  * Below the session's `spark.sql.execution.topKSortFallbackThreshold`
+  * the cap is plain `orderBy(key).limit(n)`, which Spark plans as
+  * `TakeOrderedAndProject`: a per-partition top-n heap and one merge of
+  * at most n rows per partition — no global sort, no GlobalLimit funnel,
+  * and one job instead of the block plan's three scans. The block plan
+  * is kept for n at or above the threshold, where Spark would fall back
+  * to the sort + GlobalLimit funnel.
+  *
   * Used for the `--rows` cap behind cardinality-changing transform chains,
   * where "count rows post-transform in offset order" is the required
   * semantics (reference: chunk-fill count,
@@ -36,6 +45,11 @@ object OrderedCap {
             blockSize: Long = 1L << 20): DataFrame = {
     require(blockSize > 0, "blockSize must be positive")
     if (n <= 0) return df.limit(0)
+    val topK = df.sparkSession.conf
+      .get(SQLConf.TOP_K_SORT_FALLBACK_THRESHOLD.key).toInt
+    // Spark's own planning condition for TakeOrderedAndProject (limit <
+    // threshold); the threshold never exceeds Int.MaxValue, so n fits
+    if (n < topK) return df.orderBy(key).limit(n.toInt)
     val t = df.withColumn("__blk", floor(col(key) / blockSize))
     val counts = t.groupBy("__blk").agg(count(lit(1)).as("__cnt"))
     // constant partition key: the running total is over the

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -54,7 +54,8 @@ object MappedType {
   *   - Missing path (jql error) → for VARCHAR the error text itself is the
   *     value (reference writes the jql error message into the column,
   *     `/root/reference/src/consume.rs:329-336`); for typed columns → NULL
-  *     (documented divergence: reference behavior is undefined there).
+  *     (documented divergence: reference behavior is undefined there). A
+  *     malformed or non-object payload misses every path, on every face.
   */
 final case class ColumnMapping(name: String, ty: MappedType, path: String) {
 
@@ -62,43 +63,33 @@ final case class ColumnMapping(name: String, ty: MappedType, path: String) {
     * "error as value" quirk for VARCHAR columns. */
   def missingPathError: String = s"""Node "$path" not found"""
 
-  /** Compile this mapping into a Column over the JSON payload `value`.
-    * One native [[graft.functions.JsonField]] parse yields the value text
-    * (get_json_object semantics) AND path existence in a single pass —
-    * the get_json_object / json_object_keys built-ins it replaces are
-    * CodegenFallback (interpreted inside codegen'd stages) and degrade
-    * pathologically in long-lived JVMs. */
+  /** Compile this mapping alone into a Column over the JSON payload
+    * `value`: one native [[graft.functions.JsonPaths]] parse yields the
+    * value text (get_json_object semantics), path existence and the JSON
+    * token type in a single pass — the get_json_object /
+    * json_object_keys built-ins it replaces are CodegenFallback
+    * (interpreted inside codegen'd stages) and degrade pathologically in
+    * long-lived JVMs. A projection of several mappings shares one parse
+    * through [[ColumnMapping.project]]. */
   def toColumn(value: Column): Column = {
     import org.apache.spark.sql.graft.shim
-    val info = shim.column(
-      graft.functions.JsonField(shim.expression(value), path))
-    buildTyped(info.getField("raw"), info.getField("exists"))
+    fromResolved(shim.column(
+      graft.functions.JsonPaths(shim.expression(value), Seq(path))).getField("p0"))
   }
 
-  /** Compile this mapping against a pre-parsed `map<string,string>` of the
-    * payload (see [[ColumnMapping.parsed]]) — top-level paths only. The
-    * map gives existence (map_contains_key) and the extracted text in one
-    * JSON parse per ROW instead of ~3 per mapped column: nested
-    * values/arrays arrive as their JSON text, scalars as their bare text,
-    * exactly like get_json_object. Falls back to [[toColumn]] for nested
-    * dotted paths, purely numeric ones (a top-level array payload indexes
-    * through JsonField; the object map can't represent it), quoted
-    * paths (the quote grammar lives in JsonField.splitSelectors — the raw
-    * path text is not the key), AND comma paths (multi-selection). */
-  def toColumnFromParsed(parsed: Column, value: Column): Column =
-    if (path.contains('.') || path.contains('"') || path.contains(',') ||
-      path.forall(c => c >= '0' && c <= '9') ||
-      graft.functions.JsonField.isSlice(path))
-      toColumn(value)
-    else buildTyped(element_at(parsed, path), map_contains_key(parsed, lit(path)))
+  /** This mapping's typed column from its resolved
+    * `struct<exists, raw, num>` (one field of a JsonPaths result). */
+  private def fromResolved(r: Column): Column =
+    buildTyped(r.getField("raw"), r.getField("exists"), r.getField("num"))
 
-  private def buildTyped(raw: Column, exists: Column): Column = {
+  private def buildTyped(raw: Column, exists: Column, isNumber: Column): Column = {
     val isJsonNull = exists && raw.isNull
     val out: Column = ty match {
       case MappedType.S =>
-        // object/array arrive as serialized JSON from get_json_object already;
-        // numbers mapped into a string column are dropped (ref: silent skip).
-        val isNumber = raw.rlike("^-?[0-9]+(\\.[0-9]+)?([eE][+-]?[0-9]+)?$")
+        // object/array arrive as serialized JSON already; a JSON number
+        // mapped into a string column is dropped (ref: silent skip) —
+        // decided by the token type, so an all-digit JSON STRING
+        // (`"route":"1065"`) is kept verbatim.
         when(isJsonNull, lit("null"))
           .when(!exists, lit(missingPathError))
           .when(isNumber, lit(null).cast(StringType))
@@ -122,10 +113,26 @@ final case class ColumnMapping(name: String, ty: MappedType, path: String) {
 
 object ColumnMapping {
 
-  /** One-shot parse of the JSON payload into map<string,string> — shared
-    * by every top-level mapping of a scan. Kept in its own projection by
-    * Catalyst (CollapseProject does not inline non-cheap, multiply
-    * referenced aliases), so the payload is parsed once per row. Native
+  /** Project `mappings` out of `df`'s JSON `value` column after the
+    * `leading` columns. The payload is parsed ONCE per row for all of
+    * them: one [[graft.functions.JsonPaths]] resolves every mapping path
+    * into its own projection (Catalyst's CollapseProject does not inline
+    * a non-cheap, multiply referenced alias), and each mapping types its
+    * field of that struct. Shared by the batch consume tail and the `-d`
+    * stream, so both faces give one answer per payload. */
+  def project(df: DataFrame, mappings: Seq[ColumnMapping], leading: Column*): DataFrame = {
+    import org.apache.spark.sql.graft.shim
+    val resolved = df.withColumn("__paths", shim.column(
+      graft.functions.JsonPaths(shim.expression(col("value")), mappings.map(_.path))))
+    resolved.select(leading ++ mappings.zipWithIndex.map { case (m, i) =>
+      m.fromResolved(col("__paths").getField(s"p$i"))
+    }: _*)
+  }
+
+  /** One-shot parse of the JSON payload's TOP-LEVEL fields into
+    * map<string,string>, for plan code that keys into the payload by
+    * name (the filter-json-eq transform, payload-key entries); `-c`
+    * mappings go through [[project]] instead. Native
     * [[graft.functions.JsonToMap]], not `from_json`: JsonToStructs is
     * CodegenFallback and its interpreted eval degrades in long-lived JVMs
     * (3 s → 220 s measured on an identical query). */

@@ -337,8 +337,8 @@ object FluvioDuck {
     *
     * Projection: default record columns or -c mappings (columns_mappings,
     * /root/reference/src/consume.rs:607-637). With mappings, the payload
-    * is parsed ONCE per row into map<string,string> (ColumnMapping.parsed)
-    * and every top-level mapping reads from it.
+    * is parsed once per row and every mapping path, top-level or nested,
+    * resolves from that one parse ([[ColumnMapping.project]]).
     *
     * Ordering: record order WITHIN each partition (the log order users see
     * from a consume). sortWithinPartitions, not orderBy: parquet row order
@@ -352,11 +352,7 @@ object FluvioDuck {
     val projected =
       if (opt.columns.isEmpty)
         capped.select(col("offset"), col("timestamp"), col("value"))
-      else {
-        val withParsed = capped.withColumn("__parsed", ColumnMapping.parsed(col("value")))
-        val mapped = opt.columns.map(_.toColumnFromParsed(col("__parsed"), col("value")))
-        withParsed.select(col("offset").as("__offset") +: mapped: _*)
-      }
+      else ColumnMapping.project(capped, opt.columns, col("offset").as("__offset"))
     val ordered = projected
       .sortWithinPartitions(col(if (opt.columns.isEmpty) "offset" else "__offset"))
     if (opt.columns.isEmpty) ordered else ordered.drop("__offset")
@@ -375,23 +371,15 @@ object FluvioDuck {
   /** `fluvio_partitions()` — one row per partition: (topic, partition, LEO).
     * Reference: `/root/reference/src/partition.rs:21-29`, replica-key split
     * `:113-122`, LEO `:131`. LEO = log-end-offset = row count for dense
-    * offsets; computed as a union of per-topic single-row aggregates (one
-    * distributed job, no driver-side counting). Partition id is VARCHAR, as
-    * in the reference's replica-key split. */
+    * offsets, read from segment footers through the DSv2 planner's own
+    * definition ([[graft.sources.v2.FluvioDsv2.leo]], cached per segment
+    * identity) — no Spark job. Partition id is VARCHAR, as in the
+    * reference's replica-key split. */
   def partitions(spark: SparkSession, baseDir: String): DataFrame = {
-    val perTopic = TopicRegistry.allTopics(baseDir).map { t =>
-      val df = Tables.load(spark, baseDir, t)
-      if (df.columns.contains("partition"))
-        // multi-partition topic: per-partition LEO via one grouped agg
-        // (map-side partials; the partition column comes free from the
-        // hive layout, no data read beyond row counts)
-        df.groupBy(col("partition").cast("string").as("partition"))
-          .agg(count(lit(1)).as("LEO"))
-          .select(lit(t).as("topic"), col("partition"), col("LEO"))
-      else
-        df.agg(count(lit(1)).as("LEO"))
-          .select(lit(t).as("topic"), lit("0").as("partition"), col("LEO"))
-    }
-    perTopic.reduce(_.unionAll(_))
+    import spark.implicits._
+    TopicRegistry.allTopics(baseDir).flatMap { t =>
+      graft.sources.v2.FluvioDsv2.leo(baseDir, t).toSeq.sortBy(_._1)
+        .map { case (p, n) => (t, p.toString, n) }
+    }.toDF("topic", "partition", "LEO")
   }
 }

@@ -5,13 +5,17 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.io.{ColumnIOFactory, RecordReader}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -21,6 +25,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.{ConsumeOpt, OffsetSpec, RecordView, TopicRegistry}
 
@@ -114,13 +119,22 @@ object FluvioDsv2 {
   }
 
   /** Data segments of one partition, in append order (mtime, then name —
-    * appended segments always have later mtimes). */
-  def segmentFiles(dirOrFile: File): Seq[File] =
+    * appended segments always have later mtimes). The directory is walked
+    * recursively, skipping the names the parquet file source treats as
+    * hidden (`_`/`.` prefixes), so every parquet layout a file-source
+    * read of the path would count is counted here too. */
+  def segmentFiles(dirOrFile: File): Seq[File] = {
+    def hidden(f: File): Boolean =
+      f.getName.startsWith(".") || (f.getName.startsWith("_") && !f.getName.contains("="))
+    def walk(d: File): Seq[File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.filterNot(hidden).flatMap { f =>
+        if (f.isDirectory) walk(f)
+        else if (f.isFile && f.getName.endsWith(".parquet")) Seq(f)
+        else Seq.empty
+      }
     if (dirOrFile.isFile) Seq(dirOrFile)
-    else Option(dirOrFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith("_") &&
-        !f.getName.startsWith(".") && f.getName.endsWith(".parquet"))
-      .sortBy(f => (f.lastModified(), f.getName)).toSeq
+    else walk(dirOrFile).sortBy(f => (f.lastModified(), f.getPath))
+  }
 
   // footer row counts, keyed by (path, mtime, length) — segments are
   // immutable once written, so this never goes stale
@@ -142,10 +156,53 @@ object FluvioDsv2 {
       (f.getAbsolutePath, f.lastModified(), f.length()),
       _ => {
         footerParses.incrementAndGet()
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(f.getAbsolutePath), new Configuration()))
+        val r = open(f.getAbsolutePath, hadoopConf())
         try r.getRecordCount finally r.close()
       })
+
+  /** The running context's Hadoop configuration: loaded once per
+    * SparkContext, read-only here. Every parquet open of this source
+    * goes through [[open]] with this conf (driver side) or its broadcast
+    * copy ([[broadcastConf]], executor side). */
+  def hadoopConf(): Configuration = SparkSession.active.sparkContext.hadoopConfiguration
+
+  /** A broadcast of [[hadoopConf]], shipped in every reader factory —
+    * the file source's `SerializableConfiguration` idiom: readers on
+    * executors get the driver's loaded conf instead of building their
+    * own. Unlike the file source, which broadcasts per scan, one
+    * broadcast is reused until the conf's contents change: serializing
+    * its ~1,000 entries costs about 17 ms (4-vCPU VM), more than a small
+    * window's whole read, while fingerprinting them costs well under 1 ms. */
+  def broadcastConf(): Broadcast[SerializableConfiguration] = synchronized {
+    val sc = SparkSession.active.sparkContext
+    val conf = sc.hadoopConfiguration
+    val stamp = scala.util.hashing.MurmurHash3.unorderedHash(
+      conf.iterator().asScala.map(e => (e.getKey, e.getValue)))
+    confBroadcast match {
+      case Some((c, st, b)) if (c eq sc) && st == stamp => b
+      case _ =>
+        val b = sc.broadcast(new SerializableConfiguration(conf))
+        confBroadcast = Some((sc, stamp, b))
+        b
+    }
+  }
+
+  private var confBroadcast
+      : Option[(org.apache.spark.SparkContext, Int, Broadcast[SerializableConfiguration])] = None
+
+  /** Open a segment's footer with an ALREADY LOADED conf. No parquet-mr
+    * entry point that takes no conf may be used here or in the reader:
+    * `ParquetFileReader.open(InputFile)`, `ParquetReadOptions.builder()`
+    * and `ParquetReader.builder(readSupport, path)` each build a fresh
+    * Hadoop `Configuration`, whose first read scans every jar on the
+    * classpath for `core-default.xml` — about 10 ms per open, paid per
+    * segment slice per query (and `.withConf(conf)` on the old builder
+    * comes too late: its constructor has already loaded one). */
+  def open(path: String, conf: Configuration): ParquetFileReader = {
+    val p = new Path(path)
+    ParquetFileReader.open(HadoopInputFile.fromPath(p, conf),
+      HadoopReadOptions.builder(conf, p).build())
+  }
 
   /** Current LEO (record count) per partition. */
   def leo(baseDir: String, topic: String): Map[Int, Long] =
@@ -406,10 +463,7 @@ class FluvioBatch(opt: ConsumeOpt, view: RecordView, baseDir: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new FluvioPartitionReader(partition.asInstanceOf[FluvioInputPartition])
-    }
+    new FluvioReaderFactory(FluvioDsv2.broadcastConf())
 }
 
 class FluvioMicroBatchStream(opt: ConsumeOpt, view: RecordView, baseDir: String,
@@ -651,10 +705,7 @@ class FluvioMicroBatchStream(opt: ConsumeOpt, view: RecordView, baseDir: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new FluvioPartitionReader(partition.asInstanceOf[FluvioInputPartition])
-    }
+    new FluvioReaderFactory(FluvioDsv2.broadcastConf())
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -668,40 +719,108 @@ case class FluvioInputPartition(path: String, partitionId: Int,
                                 valueCol: String,
                                 fields: Seq[String]) extends InputPartition
 
+/** Builds one [[FluvioPartitionReader]] per input partition from the
+  * scan's broadcast Hadoop conf (see [[FluvioDsv2.broadcastConf]]). */
+class FluvioReaderFactory(conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new FluvioPartitionReader(partition.asInstanceOf[FluvioInputPartition],
+      conf.value.value)
+}
+
 /** Executor-side reader: parquet example API (Group) — record-at-a-time
   * over one segment slice, no Spark-internal reader dependencies. The
   * timestamp unit (ms/µs/ns) is read from the file's logical type
-  * annotation and normalized to Spark's µs. */
-class FluvioPartitionReader(p: FluvioInputPartition)
+  * annotation and normalized to Spark's µs.
+  *
+  * The footer is opened ONCE, with the caller's loaded conf (see
+  * [[FluvioDsv2.open]] for why no conf-less parquet-mr entry point may be
+  * used), and the same file reader then serves the rows: only the file
+  * columns behind the pruned `fields` are requested, and row groups that
+  * lie wholly inside `skip` are skipped without being decoded. The
+  * one-argument constructor reads with the running context's conf. */
+class FluvioPartitionReader(p: FluvioInputPartition, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new Path(p.path)).build()
-  private var skipped = 0L
+  def this(p: FluvioInputPartition) = this(p, FluvioDsv2.hadoopConf())
+
+  private val file: ParquetFileReader = FluvioDsv2.open(p.path, conf)
+  private val projection: MessageType = {
+    val fileSchema = file.getFileMetaData.getSchema
+    val cols = p.fields.collect {
+      case "offset"    => p.offsetCol
+      case "timestamp" => p.tsCol
+      case "value"     => p.valueCol
+    }.distinct
+    // getFieldIndex throws for a column the file lacks: a loud failure
+    new MessageType(fileSchema.getName,
+      cols.map(c => fileSchema.getFields.get(fileSchema.getFieldIndex(c))): _*)
+  }
+  private val columnIO =
+    if (projection.getFieldCount == 0) null
+    else {
+      file.setRequestedSchema(projection)
+      new ColumnIOFactory().getColumnIO(projection, file.getFileMetaData.getSchema)
+    }
+  private val rowGroups = file.getRowGroups
+  private var nextGroup = 0
+  private var records: RecordReader[Group] = _
+  private var leftInGroup = 0L
+  private var toSkip = p.skip
   private var delivered = 0L
   private var current: Group = _
+  private val fieldArr = p.fields.toArray
+  private def indexOf(c: String): Int =
+    if (projection.containsField(c)) projection.getFieldIndex(c) else -1
+  private val offIdx = indexOf(p.offsetCol)
+  private val tsIdx = indexOf(p.tsCol)
+  private val valIdx = indexOf(p.valueCol)
+  private val offIsInt32 = offIdx >= 0 &&
+    projection.getType(offIdx).asPrimitiveType().getPrimitiveTypeName ==
+      org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32
   // timestamp extractor (handles INT64 ms/µs/ns annotations AND the
-  // legacy INT96 julian-day encoding Spark writes by default), resolved
-  // once from the first record's schema
-  private var tsMicrosOf: Group => Long = _
+  // legacy INT96 julian-day encoding Spark writes by default)
+  private val tsMicrosOf: Group => Long =
+    if (tsIdx < 0) null else resolveTsExtractor()
+
+  /** Position on the next row group holding an undelivered row; whole
+    * groups inside the skip are passed over undecoded. */
+  private def openGroup(): Boolean = {
+    while (leftInGroup == 0) {
+      if (nextGroup >= rowGroups.size) return false
+      val rows = rowGroups.get(nextGroup).getRowCount
+      nextGroup += 1
+      if (toSkip >= rows) {
+        toSkip -= rows
+        if (columnIO != null) file.skipNextRowGroup()
+      } else {
+        if (columnIO != null)
+          records = columnIO.getRecordReader(file.readNextRowGroup(),
+            new GroupRecordConverter(projection))
+        leftInGroup = rows
+        while (toSkip > 0) {
+          if (records != null) records.read()
+          toSkip -= 1; leftInGroup -= 1
+        }
+      }
+    }
+    true
+  }
 
   override def next(): Boolean = {
-    if (delivered >= p.take) return false
-    while (skipped < p.skip) {
-      if (reader.read() == null) return false
-      skipped += 1
-    }
-    current = reader.read()
-    if (current == null) return false
+    if (delivered >= p.take || !openGroup()) return false
+    // no file column requested (a `partition`-only or count scan):
+    // rows are counted from the footer, nothing is decoded
+    current = if (records != null) records.read() else null
+    leftInGroup -= 1
     delivered += 1
     true
   }
 
-  private def resolveTsExtractor(g: Group): Group => Long = {
+  private def resolveTsExtractor(): Group => Long = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val t = g.getType
-    val idx = t.getFieldIndex(p.tsCol)
-    val prim = t.getType(idx).asPrimitiveType()
+    val idx = tsIdx
+    val prim = projection.getType(idx).asPrimitiveType()
     if (prim.getPrimitiveTypeName == PrimitiveTypeName.INT96) {
       // INT96: 8 bytes little-endian nanos-of-day + 4 bytes julian day
       (grp: Group) => {
@@ -729,36 +848,32 @@ class FluvioPartitionReader(p: FluvioInputPartition)
 
   override def get(): InternalRow = {
     val g = current
-    if (tsMicrosOf == null) tsMicrosOf = resolveTsExtractor(g)
-    val t = g.getType
-    def present(name: String): Boolean =
-      g.getFieldRepetitionCount(t.getFieldIndex(name)) > 0
-    def longOf(name: String): Long = {
-      val idx = t.getFieldIndex(name)
-      t.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-          g.getInteger(idx, 0).toLong
-        case _ => g.getLong(idx, 0)
-      }
-    }
     // offsets are dense by the log model — a null offset is corrupt data
     // and must fail loudly; timestamp/value are nullable in the advertised
     // schema, so null cells pass through as nulls (the example-API getters
     // throw on absent fields instead of returning null). Only the PRUNED
     // fields materialize: a `SELECT offset` stream never builds the value
-    // string (SupportsPushDownRequiredColumns).
-    val vals: Array[Any] = p.fields.map {
-      case "partition" => p.partitionId: Any
-      case "offset"    => longOf(p.offsetCol): Any
-      case "timestamp" => if (present(p.tsCol)) tsMicrosOf(g): Any else null
-      case "value" =>
-        if (present(p.valueCol)) UTF8String.fromString(g.getString(p.valueCol, 0))
-        else null
-      case other =>
-        throw new IllegalStateException(s"unknown pruned field `$other`")
-    }.toArray
+    // string (SupportsPushDownRequiredColumns). With only `partition`
+    // requested, nothing was decoded and `g` is null.
+    val vals = new Array[Any](fieldArr.length)
+    var i = 0
+    while (i < vals.length) {
+      vals(i) = fieldArr(i) match {
+        case "partition" => p.partitionId
+        case "offset" =>
+          if (offIsInt32) g.getInteger(offIdx, 0).toLong else g.getLong(offIdx, 0)
+        case "timestamp" =>
+          if (g.getFieldRepetitionCount(tsIdx) == 0) null else tsMicrosOf(g)
+        case "value" =>
+          if (g.getFieldRepetitionCount(valIdx) == 0) null
+          else UTF8String.fromBytes(g.getBinary(valIdx, 0).getBytes)
+        case other =>
+          throw new IllegalStateException(s"unknown pruned field `$other`")
+      }
+      i += 1
+    }
     new GenericInternalRow(vals)
   }
 
-  override def close(): Unit = reader.close()
+  override def close(): Unit = file.close()
 }

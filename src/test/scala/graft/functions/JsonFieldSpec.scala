@@ -97,25 +97,20 @@ class JsonFieldSpec extends SparkSpec {
     assert(e.isLeft && e.swap.toOption.get.contains("unterminated quote"))
   }
 
-  test("toColumnFromParsed routes quoted paths through JsonField") {
-    // the map fast path would treat the raw text `"a.b"` (quotes included)
-    // as the key; quoted paths must take the full-parse route
-    val m = ColumnMapping("x", MappedType.I, "\"a.b\"")
-    val df = spark.range(1).select(lit("""{"a.b": 7}""").as("value"))
-    val got = df.select(
-      m.toColumnFromParsed(ColumnMapping.parsed(col("value")), col("value")))
-      .head()
+  /** `m` through the consume projection: the one shared JsonPaths parse. */
+  private def projected(m: ColumnMapping, json: String): org.apache.spark.sql.Row =
+    ColumnMapping.project(spark.range(1).select(lit(json).as("value")), Seq(m)).head()
+
+  test("project resolves quoted paths through the path grammar") {
+    // the raw text `"a.b"` (quotes included) is not the key: the quote
+    // grammar of JsonField.splitSelectors applies
+    val got = projected(ColumnMapping("x", MappedType.I, "\"a.b\""), """{"a.b": 7}""")
     assert(got.getInt(0) == 7)
   }
 
-  test("toColumnFromParsed routes numeric top-level paths through JsonField") {
-    // the map<string,string> fast path can't represent a top-level array
-    // payload; a purely numeric path must fall back to the full parse
-    val m = ColumnMapping("x", MappedType.I, "0")
-    val df = spark.range(1).select(lit("""[42]""").as("value"))
-    val got = df.select(
-      m.toColumnFromParsed(ColumnMapping.parsed(col("value")), col("value")))
-      .head()
+  test("project indexes a top-level array payload with a numeric path") {
+    // a top-level array payload has no keys: a purely numeric path indexes
+    val got = projected(ColumnMapping("x", MappedType.I, "0"), """[42]""")
     assert(got.getInt(0) == 42)
   }
 
@@ -150,14 +145,50 @@ class JsonFieldSpec extends SparkSpec {
       JsonField.splitPath("a,b")).getMessage.contains("single selector"))
   }
 
-  test("toColumnFromParsed routes comma paths through JsonField") {
-    // the map fast path would treat `a,b` as one literal key; the
-    // multi-selection grammar lives in the full JsonField parse
-    val m = ColumnMapping("x", MappedType.S, "a,b")
-    val df = spark.range(1).select(lit("""{"a": 1, "b": 2}""").as("value"))
-    val got = df.select(
-      m.toColumnFromParsed(ColumnMapping.parsed(col("value")), col("value")))
-      .head()
+  test("project resolves comma paths as multi-selection") {
+    // `a,b` is jql multi-selection, not one literal key
+    val got = projected(ColumnMapping("x", MappedType.S, "a,b"), """{"a": 1, "b": 2}""")
     assert(got.getString(0) == "[1,2]")
+  }
+
+  test("VARCHAR mappings drop JSON numbers by token type, not by text") {
+    // an all-digit JSON STRING is a string (Helsinki's route/desi/dir);
+    // only a JSON NUMBER mapped into VARCHAR is dropped
+    val j = """{"route": "1065", "n": 1065, "f": "-2.5e3", "x": 2.5}"""
+    val maps = Seq(ColumnMapping("route", MappedType.S, "route"),
+      ColumnMapping("n", MappedType.S, "n"),
+      ColumnMapping("f", MappedType.S, "f"),
+      ColumnMapping("x", MappedType.S, "x"),
+      ColumnMapping("ni", MappedType.I, "n"))
+    val r = ColumnMapping.project(spark.range(1).select(lit(j).as("value")), maps).head()
+    assert(r.getString(0) == "1065")
+    assert(r.isNullAt(1))
+    assert(r.getString(2) == "-2.5e3")
+    assert(r.isNullAt(3))
+    assert(r.getInt(4) == 1065)
+    // the single-mapping column agrees
+    assert(spark.range(1).select(
+      maps.head.toColumn(lit(j))).head().getString(0) == "1065")
+  }
+
+  test("malformed and non-object payloads: batch tail == -d stream, path misses") {
+    import graft.sources.{ConsumeOpt, FluvioDuck}
+    val payloads = Seq("not json", "[1,2]", """{"k": "v"}""", "7")
+    val df = payloads.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .foldLeft(spark.range(0).select(lit(0L).as("offset"), lit("").as("value"))) {
+        case (acc, (o, v)) =>
+          acc.unionByName(spark.range(1).select(lit(o).as("offset"), lit(v).as("value")))
+      }
+      .withColumn("timestamp", current_timestamp())
+    val opt = ConsumeOpt.parse("t -B -c k=k -c ki:i=k -c m=meta.k").toOption.get
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val batch = rows(FluvioDuck.projectAndOrder(df, opt))
+    val stream = rows(graft.streaming.ConsumeStream.fromRecords(df, opt,
+      "offset", "timestamp", "value"))
+    assert(batch == stream)
+    assert(batch.count(_ == """Node "k" not found|null|Node "meta.k" not found""") == 3,
+      batch.mkString("\n"))
+    assert(batch.contains("""v|null|Node "meta.k" not found"""), batch.mkString("\n"))
   }
 }

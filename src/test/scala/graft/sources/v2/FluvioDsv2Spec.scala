@@ -620,4 +620,54 @@ class FluvioDsv2Spec extends SparkSpec {
       assert(rows.forall(r => !r.isNullAt(1) && !r.isNullAt(3)))
     } finally q.stop()
   }
+
+  test("reader factories share one conf broadcast until the conf changes") {
+    val b1 = FluvioDsv2.broadcastConf()
+    assert(FluvioDsv2.broadcastConf() eq b1)
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("graft.test.conf.probe", "1")
+    try {
+      val b2 = FluvioDsv2.broadcastConf()
+      assert(b2 ne b1, "a changed conf must be re-broadcast")
+      assert(b2.value.value.get("graft.test.conf.probe") == "1")
+    } finally hc.unset("graft.test.conf.probe")
+  }
+
+  test("a reader slice crossing row groups delivers exactly rows [skip, skip+take)") {
+    val dir = java.nio.file.Files.createTempDirectory("dsv2_groups").toFile
+    val seg = new java.io.File(dir, "seg")
+    // tiny row groups: the size check runs every 100 rows, so each group
+    // holds a few hundred rows and the slice below spans several
+    Tables.load(spark, sf, "events").coalesce(1)
+      .write.option("parquet.block.size", "4096").parquet(seg.getAbsolutePath)
+    val file = seg.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val groups = {
+      val r = FluvioDsv2.open(file.getAbsolutePath, FluvioDsv2.hadoopConf())
+      try r.getRowGroups.size finally r.close()
+    }
+    assert(groups > 2, s"fixture needs several row groups, got $groups")
+    val want = Tables.load(spark, sf, "events").orderBy("event_id")
+      .select("event_id").collect().map(_.getLong(0)).slice(350, 550).toSeq
+    def read(fields: Seq[String]): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+      val r = new FluvioPartitionReader(FluvioInputPartition(file.getAbsolutePath, 3,
+        skip = 350, take = 200, "event_id", "ts", "props", fields))
+      val out = Seq.newBuilder[org.apache.spark.sql.catalyst.InternalRow]
+      try while (r.next()) out += r.get().copy() finally r.close()
+      out.result()
+    }
+    assert(read(Seq("offset")).map(_.getLong(0)) == want)
+    // `partition` alone decodes nothing but still counts the slice
+    val parts = read(Seq("partition"))
+    assert(parts.size == 200 && parts.forall(_.getInt(0) == 3))
+  }
+
+  test("fluvio_partitions answers from footer metadata: no scan, the planner's LEO") {
+    val base = MpFixture.baseDir(spark, sf)
+    val df = graft.sources.FluvioDuck.partitions(spark, base)
+    // a local relation: no file scan, so no Spark job counts rows
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("LocalTableScan") && !plan.contains("Scan parquet"), plan)
+    assert(df.collect().map(r => r.getString(1).toInt -> r.getLong(2)).toMap ==
+      FluvioDsv2.leo(base, "events_mp"))
+  }
 }
